@@ -274,11 +274,14 @@ def plans(tag: str) -> None:
     try:
         from sql_graph_visualizer_spark.streaming.replay import _probe_file_seq_ranges
 
-        ranges = _probe_file_seq_ranges(jlog, {"path": jdir, "fmt": "json"}, "seq")
+        ranges = _probe_file_seq_ranges(jlog, "seq")
         e_lo, e_hi = 0, 25_000  # epoch 0 of 4
         files = [f for f, mn, mx in ranges if mn < e_hi and mx >= e_lo]
-        chunk = spark.read.schema(jlog.schema).json(files)
-        chunk = chunk.filter((chunk["seq"] >= e_lo) & (chunk["seq"] < e_hi))
+        if files:
+            chunk = spark.read.schema(jlog.schema).json(files)
+            chunk = chunk.filter((chunk["seq"] >= e_lo) & (chunk["seq"] < e_hi))
+        else:  # no file intersects the window (same guard as replay_batch)
+            chunk = spark.createDataFrame([], jlog.schema)
     except ImportError:  # round-start tree: full-scan chunk
         chunk = jlog.filter((jlog["seq"] >= 0) & (jlog["seq"] < 25_000))
     cap("cdc_replay_chunk", chunk)

@@ -2,10 +2,13 @@
 
 Iceberg separates data IO (done by the engine's writers) from table
 *metadata* IO (manifests, version hints), behind a pluggable ``FileIO``.
-SnapshotTable does the same: Spark reads/writes the parquet data files
-through its own Hadoop filesystem layer, while every metadata operation
-— manifest create, version-hint flip, file listing, size stat, expiry —
-goes through this interface.
+SnapshotTable does the same: Spark reads/writes the bulk parquet data
+files through its own Hadoop filesystem layer, while every metadata
+operation — manifest create, version-hint flip, file listing, size
+stat, expiry — goes through this interface. So do metadata-sized data
+files the driver writes itself: an ``append`` of a few rows (one
+lineage row per epoch) serializes its parquet on the driver and
+creates it here, instead of launching a Spark write job.
 
 ``LocalFileIO`` implements it over POSIX primitives and carries the
 atomicity the commit protocol relies on:
@@ -43,9 +46,11 @@ class LocalFileIO:
         with open(path) as f:
             return f.read()
 
-    def create_exclusive(self, path: str, data: str) -> None:
-        """Create-if-absent (raises FileExistsError on a lost commit race)."""
-        with open(path, "x") as f:
+    def create_exclusive(self, path: str, data: str | bytes) -> None:
+        """Create-if-absent (raises FileExistsError on a lost commit race).
+        ``bytes`` are written as-is (driver-written data files); ``str``
+        as text (manifests, segments)."""
+        with open(path, "xb" if isinstance(data, bytes) else "x") as f:
             f.write(data)
 
     def replace_atomic(self, path: str, data: str) -> None:

@@ -74,6 +74,7 @@ from __future__ import annotations
 
 import json
 import os
+import struct
 import threading
 import time
 import uuid
@@ -136,6 +137,84 @@ def _murmur3_hash_long(v: int, seed: int = 42) -> int:
     h1 = (h1 * 0xC2B2AE35) & 0xFFFFFFFF
     h1 ^= h1 >> 16
     return h1 - 0x100000000 if h1 >= 0x80000000 else h1
+
+
+_M64 = 0xFFFFFFFFFFFFFFFF
+_XP1, _XP2, _XP3, _XP4, _XP5 = (
+    0x9E3779B185EBCA87,
+    0xC2B2AE3D27D4EB4F,
+    0x165667B19E3779F9,
+    0x85EBCA77C2B2AE63,
+    0x27D4EB2F165667C5,
+)
+
+
+def _rotl64(x: int, r: int) -> int:
+    return ((x << r) | (x >> (64 - r))) & _M64
+
+
+def _xxh64_round(acc: int, lane: int) -> int:
+    return (_rotl64((acc + lane * _XP2) & _M64, 31) * _XP1) & _M64
+
+
+def _xxh64_bytes(data: bytes, seed: int) -> int:
+    """XXH64 of ``data`` (unsigned, before the final avalanche) — the
+    word loop of Spark's ``XXH64.hashUnsafeBytes``, little-endian lanes."""
+    n, i = len(data), 0
+    if n >= 32:
+        v = [(seed + _XP1 + _XP2) & _M64, (seed + _XP2) & _M64, seed & _M64, (seed - _XP1) & _M64]
+        while i + 32 <= n:
+            lanes = struct.unpack_from("<4Q", data, i)
+            v = [_xxh64_round(a, lane) for a, lane in zip(v, lanes)]
+            i += 32
+        h = (_rotl64(v[0], 1) + _rotl64(v[1], 7) + _rotl64(v[2], 12) + _rotl64(v[3], 18)) & _M64
+        for a in v:
+            h = ((h ^ _xxh64_round(0, a)) * _XP1 + _XP4) & _M64
+    else:
+        h = (seed + _XP5) & _M64
+    h = (h + n) & _M64
+    while i + 8 <= n:
+        h ^= _xxh64_round(0, struct.unpack_from("<Q", data, i)[0])
+        h = (_rotl64(h, 27) * _XP1 + _XP4) & _M64
+        i += 8
+    if i + 4 <= n:
+        h ^= (struct.unpack_from("<I", data, i)[0] * _XP1) & _M64
+        h = (_rotl64(h, 23) * _XP2 + _XP3) & _M64
+        i += 4
+    for byte in data[i:]:
+        h ^= (byte * _XP5) & _M64
+        h = (_rotl64(h, 11) * _XP1) & _M64
+    return h
+
+
+_XXH64_TYPES = (T.StringType, T.ByteType, T.ShortType, T.IntegerType, T.LongType)
+
+
+def _xxhash64(v: Any, dt: T.DataType, seed: int = 42) -> int:
+    """Spark's ``F.xxhash64`` of one value of type ``dt`` (signed, like
+    the bigint Spark returns), in pure Python — verified against Spark
+    in ``tests/test_lake.py``. Lets the driver route a handful of rows to
+    their buckets exactly as ``_bucket_expr`` would, without a Spark job
+    (the lineage append path). Raises ``TypeError`` for a type the port
+    does not cover rather than routing it somewhere else."""
+    if not isinstance(dt, _XXH64_TYPES) or getattr(dt, "collation", "UTF8_BINARY") != "UTF8_BINARY":
+        raise TypeError(f"no driver-side xxhash64 for bucket column type {dt.simpleString()}")
+    if v is None:
+        return seed  # Spark leaves the seed unchanged for a null input
+    if isinstance(dt, T.StringType):
+        h = _xxh64_bytes(v.encode("utf-8"), seed)
+    elif isinstance(dt, T.LongType):
+        h = ((seed + _XP5 + 8) & _M64) ^ _xxh64_round(0, v & _M64)
+        h = (_rotl64(h, 27) * _XP1 + _XP4) & _M64
+    else:  # byte/short/int hash as a 4-byte int
+        h = ((seed + _XP5 + 4) & _M64) ^ (((v & 0xFFFFFFFF) * _XP1) & _M64)
+        h = (_rotl64(h, 23) * _XP2 + _XP3) & _M64
+    h ^= h >> 33
+    h = (h * _XP2) & _M64
+    h ^= h >> 29
+    h = (h * _XP3) & _M64
+    h ^= h >> 32
+    return h - (1 << 64) if h >> 63 else h
 
 
 _PART_TOKEN_CACHE: dict[int, list[int]] = {}
@@ -793,6 +872,18 @@ class SnapshotTable:
             F.pmod(h, F.lit(int(mig["new_num_buckets"]))),
         ).otherwise(old_b)
 
+    @staticmethod
+    def _bucket_of(m: dict[str, Any], v: Any, dt: T.DataType) -> int:
+        """Driver-side twin of ``_bucket_expr`` for one bucket-column
+        value of type ``dt``: the same xxhash64, the same pmod and the
+        same progressive-migration CASE."""
+        h = _xxhash64(v, dt)
+        old_b = h % int(m["num_buckets"])  # Python % of a signed h = Spark pmod
+        mig = m.get("migration")
+        if mig and old_b < int(mig["frontier"]):
+            return h % int(mig["new_num_buckets"])
+        return old_b
+
     def bucket_id(
         self, col: Column | str | None = None, manifest: dict[str, Any] | None = None
     ) -> Column:
@@ -1436,16 +1527,55 @@ class SnapshotTable:
             if prepared.winner_seqs is not None:
                 prepared.winner_seqs.unpersist()
 
-    def append(self, df: DataFrame, epoch_id: int = -1, query_id: str = "default") -> int:
-        """Append-only commit (used by the lineage/metrics table)."""
+    def _write_rows(
+        self, rows: list[tuple], m: dict[str, Any], seq: int
+    ) -> dict[str, list[dict[str, Any]]]:
+        """Driver-side twin of ``_write_data`` for a few row tuples (in
+        the table schema's column order): route each row with
+        ``_bucket_of``, then write one zstd parquet file per touched
+        bucket through FileIO, in the same ``commit-<token>/__b=<b>/``
+        layout and ``_physical`` schema a Spark write produces. No Spark
+        job runs, and the entry sizes come from the bytes written rather
+        than a listing."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        schema = T.StructType.fromJson(m["schemas"][str(m["schema_id"])])
+        bucket_i = schema.fieldNames().index(m["bucket_col"])
+        bucket_dt = schema.fields[bucket_i].dataType
+        by_bucket: dict[int, list[tuple]] = {}
+        for r in rows:
+            if len(r) != len(schema.fields):
+                raise ValueError(f"row has {len(r)} fields, table schema has {len(schema.fields)}")
+            b = self._bucket_of(m, r[bucket_i], bucket_dt)
+            by_bucket.setdefault(b, []).append((*r, seq, False))
+        arrow_schema = to_arrow_schema(_physical(schema))
+        token = uuid.uuid4().hex[:12]
+        commit_rel = os.path.join(_DATA_DIR, f"commit-{token}")
+        out: dict[str, list[dict[str, Any]]] = {}
+        for b, brows in sorted(by_bucket.items()):
+            cols = [pa.array(c, type=f.type) for c, f in zip(zip(*brows), arrow_schema)]
+            buf = pa.BufferOutputStream()
+            pq.write_table(pa.Table.from_arrays(cols, schema=arrow_schema), buf, compression="zstd")
+            data = buf.getvalue().to_pybytes()
+            bucket_rel = os.path.join(commit_rel, f"__b={b}")
+            rel = os.path.join(bucket_rel, f"part-00000-{token}.zstd.parquet")
+            self.io.makedirs(os.path.join(self.path, bucket_rel))
+            self.io.create_exclusive(os.path.join(self.path, rel), data)
+            out[str(b)] = [{"path": rel, "schema_id": m["schema_id"], "bytes": len(data)}]
+        return out
+
+    def append(self, rows: list[tuple], epoch_id: int = -1, query_id: str = "default") -> int:
+        """Append-only commit of row tuples in the table schema's column
+        order (the lineage/metrics table's write path). The rows are
+        written from the driver (``_write_rows``) and committed through
+        the same fenced, rebasing manifest commit as every other write,
+        so an append runs no Spark job."""
         m = self.manifest()
         if epoch_id >= 0 and int(m["epochs"].get(query_id, -1)) >= epoch_id:
             return m["version"]
-        table_schema = T.StructType.fromJson(m["schemas"][str(m["schema_id"])])
-        rows = align_to_schema(df, table_schema).withColumns(
-            {_SEQ: F.lit(max(epoch_id, 0)).cast("long"), _DELETED: F.lit(False)}
-        )
-        new_files = self._write_data(rows, m)
+        new_files = self._write_rows(rows, m, seq=max(epoch_id, 0))
 
         def build(cur: dict[str, Any]) -> dict[str, Any]:
             # appended buckets get a new segment = current entries + new;
@@ -1684,9 +1814,14 @@ class SnapshotTable:
         the delta lists. Work ∝ the folded buckets' bytes — schedule it
         off the ingest path (size- or count-triggered, e.g.
         ``min_deltas=8``), exactly like Iceberg's rewrite_data_files.
-        Conflict-safe: bucket tokens validate against concurrent ingest
-        (a racing merge or delta commit to a target bucket invalidates
-        this job, which yields — ingest always wins)."""
+        Conflict-safe against concurrent ingest: a racing commit that
+        rewrote a target bucket's base (CoW merge, expiry, rebucket) or
+        dropped its deltas invalidates this job, which yields — ingest
+        always wins. A racing MoR commit that only stacked NEW deltas on
+        top of the ones folded here rebases instead: those newer deltas
+        stay on top of the folded base, and the LWW read over the two is
+        the same as over the unfolded stack. Otherwise an async fold
+        slower than one epoch would lose every race and never land."""
         m = self.manifest()
         sel = None if buckets is None else {int(b) for b in buckets}
         target = sorted(
@@ -1702,6 +1837,7 @@ class SnapshotTable:
         new_files = self._write_data(folded, m)
         new_segs = {b: self._write_segment(fs) for b, fs in new_files.items()}
         base_tokens = {b: self._bucket_token(m, b) for b in target}
+        folded_n = {str(b): len(self._delta_refs(m)[str(b)]) for b in target}
 
         def build(cur: dict[str, Any]) -> dict[str, Any]:
             refs = {
@@ -1713,9 +1849,12 @@ class SnapshotTable:
             c = dict(cur)
             c.pop("files", None)
             c["segments"] = refs
+            # keep only the deltas stacked after this fold's base read
             c["deltas"] = {
-                b: v for b, v in self._delta_refs(cur).items() if int(b) not in target_set
+                b: v[folded_n[b]:] if int(b) in target_set else v
+                for b, v in self._delta_refs(cur).items()
             }
+            c["deltas"] = {b: v for b, v in c["deltas"].items() if v}
             c["version"] = cur["version"] + 1
             c["parent"] = cur["version"]
             c["summary"] = {
@@ -1727,7 +1866,10 @@ class SnapshotTable:
 
         def validate(cur: dict[str, Any]) -> None:
             for b in target:
-                if self._bucket_token(cur, b) != base_tokens[b]:
+                # the bucket's token must still START with ours: same base,
+                # our folded deltas first (a MoR commit may add more after)
+                tok = self._bucket_token(cur, b) or ""
+                if not (tok == base_tokens[b] or tok.startswith(base_tokens[b] + ",")):
                     raise CommitConflictError(
                         f"bucket {b} changed under compact_deltas on {self.path}"
                     )

@@ -63,14 +63,6 @@ def get_spark(
         # raw; DISK_ONLY 5.3 vs 3.4). Flip per-session for long-lived
         # memory-resident caches on storage-tight clusters.
         .config("spark.sql.inMemoryColumnarStorage.compressed", "false")
-        # single-box topologies (local[N] and the bench's local-cluster)
-        # have no remote reads worth waiting for, but cached/disk blocks
-        # pin task preferences to executors — with two jobs sharing the
-        # executors (the replay pipelines epoch N+1's prepare under
-        # epoch N's write) the default 3s locality wait serializes them
-        # in multi-second stalls. On a real multi-node cluster set this
-        # per-job via spark-submit conf.
-        .config("spark.locality.wait", os.environ.get("SPARK_GRAFT_LOCALITY_WAIT", "0"))
         # deterministic float/timestamp behaviour for the oracle compare
         .config("spark.sql.parquet.datetimeRebaseModeInWrite", "CORRECTED")
         .config("spark.sql.parquet.int96RebaseModeInWrite", "CORRECTED")
@@ -83,6 +75,15 @@ def get_spark(
         .config("spark.executor.extraJavaOptions", "-XX:+UseParallelGC")
         .config("spark.ui.enabled", "false")
     )
+    if master.startswith("local"):
+        # single-box topologies (local[N] and the bench's local-cluster)
+        # have no remote reads worth waiting for, but cached/disk blocks
+        # pin task preferences to executors — with two jobs sharing the
+        # executors (the replay pipelines epoch N+1's prepare under
+        # epoch N's write) the default 3s locality wait serializes them
+        # in multi-second stalls. Multi-node masters keep Spark's
+        # default; override either way with ``extra_conf``.
+        builder = builder.config("spark.locality.wait", "0")
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

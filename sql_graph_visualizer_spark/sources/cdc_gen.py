@@ -157,8 +157,10 @@ def read_cdc_log(spark: SparkSession, path: str, fmt: str = "parquet") -> DataFr
     # help (the seq predicate pushes to row-group stats natively).
     # The tag is advisory metadata on this DataFrame object only — it
     # does not survive transformations, and derived/transformed logs
-    # simply take the full-scan path as before.
-    df._sgv_file_source = {"path": path, "fmt": fmt}
+    # simply take the full-scan path as before. The file set itself is
+    # the frame's own ``inputFiles()`` listing, never a re-listing of
+    # ``path``.
+    df._sgv_file_source = {"fmt": fmt}
     return df
 
 

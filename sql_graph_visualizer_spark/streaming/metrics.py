@@ -38,18 +38,21 @@ LINEAGE_SCHEMA = T.StructType(
 class LineageRecorder:
     """Appends one row per epoch to a metrics SnapshotTable.
 
+    A flush is a driver-side parquet write plus a fenced manifest commit
+    (``SnapshotTable.append``): it runs no Spark job, so committing an
+    epoch's row costs file IO, not a job on the replay's critical path.
+
     ``flush_every``: buffer K epochs per commit (default 1 = commit per
-    epoch). Sustained replays at 1 row/epoch otherwise accrete one tiny
-    parquet file + one manifest per epoch — a small-files problem over
-    long runs. Buffered rows are observability data, not source of truth:
-    a crash loses at most ``flush_every - 1`` buffered rows, and on
-    resume the fenced merges re-record those epochs as ``skipped`` rows,
-    so the lineage table still explains what happened. Call ``flush()``
-    (or rely on the replay drivers, which flush at end-of-replay) before
-    reading."""
+    epoch). It exists only to limit small files: sustained replays at
+    1 row/epoch otherwise accrete one tiny parquet file + one manifest
+    per epoch over long runs. Buffered rows are observability data, not
+    source of truth: a crash loses at most ``flush_every - 1`` buffered
+    rows, and on resume the fenced merges re-record those epochs as
+    ``skipped`` rows, so the lineage table still explains what happened.
+    Call ``flush()`` (or rely on the replay drivers, which flush at
+    end-of-replay) before reading."""
 
     def __init__(self, spark: SparkSession, path: str, flush_every: int = 1):
-        self.spark = spark
         self.flush_every = max(1, int(flush_every))
         self._buffer: list[tuple] = []
         if SnapshotTable.exists(path):
@@ -93,9 +96,8 @@ class LineageRecorder:
         for r in rows:
             by_query.setdefault(r[0], []).append(r)
         for query_id, qrows in by_query.items():
-            df = self.spark.createDataFrame(qrows, LINEAGE_SCHEMA)
             max_epoch = max(r[1] for r in qrows)
-            self.table.append(df, epoch_id=max_epoch, query_id=f"lineage:{query_id}")
+            self.table.append(qrows, epoch_id=max_epoch, query_id=f"lineage:{query_id}")
 
     def read(self):
         self.flush()

@@ -297,9 +297,7 @@ def replay_stream(
     return query
 
 
-def _probe_file_seq_ranges(
-    log: DataFrame, src: dict, order_col: str
-) -> list[tuple[str, int, int]]:
+def _probe_file_seq_ranges(log: DataFrame, order_col: str) -> list[tuple[str, int, int]]:
     """Per-file ``(path, min_seq, max_seq)`` of a file-backed JSON log —
     the manual analogue of parquet row-group statistics (guide §6).
     One single-column pass over the log (the JSON parser skips every
@@ -311,10 +309,16 @@ def _probe_file_seq_ranges(
     replay skips ~(epochs-1)/epochs of the gzip decompress+parse work
     per epoch. Exactness does not depend on that layout: the ranges are
     computed from the data and the chunk filter still applies, so an
-    unordered log merely skips fewer files."""
-    spark = log.sparkSession
+    unordered log merely skips fewer files.
+
+    The probe reads ``log.inputFiles()`` — the listing the DataFrame was
+    built over, fixed at read time — never a fresh listing of the log
+    dir, so a file dropped in after ``read_cdc_log`` is not replayed."""
+    files = log.inputFiles()
+    if not files:
+        return []
     fld = log.schema[order_col]
-    probe = spark.read.schema(T.StructType([fld])).json(src["path"])
+    probe = log.sparkSession.read.schema(T.StructType([fld])).json(files)
     rows = (
         probe.groupBy(F.input_file_name().alias("__f"))
         .agg(F.min(order_col).alias("lo"), F.max(order_col).alias("hi"))
@@ -416,7 +420,7 @@ def replay_batch(
     if bounds is None:
         if src is not None and epochs >= 2:
             if ranges is None:
-                ranges = _probe_file_seq_ranges(log, src, order_col)
+                ranges = _probe_file_seq_ranges(log, order_col)
                 log._sgv_file_ranges = ranges
             if not ranges:
                 return []
@@ -436,7 +440,7 @@ def replay_batch(
     # file readers would bypass it, so the two paths are exclusive.
     use_files = src is not None and not persist_log and epochs >= 2
     if use_files and ranges is None:
-        ranges = _probe_file_seq_ranges(log, src, order_col)
+        ranges = _probe_file_seq_ranges(log, order_col)
         log._sgv_file_ranges = ranges
     if persist_log and log.storageLevel.useMemory is False and log.storageLevel.useDisk is False:
         # DISK_ONLY, not MEMORY_AND_DISK: the replay's own shuffles and

@@ -4,6 +4,7 @@ schema evolution, snapshot expiry."""
 from __future__ import annotations
 
 import os
+import uuid
 
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -315,13 +316,13 @@ def test_commit_race_conflicting_bucket_raises(spark, tmp_path):
 
 
 def test_append_race_keeps_both_commits(spark, tmp_path):
-    from sql_graph_visualizer_spark.streaming.metrics import LINEAGE_SCHEMA, LineageRecorder
+    from sql_graph_visualizer_spark.streaming.metrics import LineageRecorder
 
     rec = LineageRecorder(spark, os.path.join(str(tmp_path), "lin"))
     row = lambda e: [("q", e, 1, 1, 0, 1, False, 1, 1.0, 1, 0)]  # noqa: E731
-    rec.table.append(spark.createDataFrame(row(0), LINEAGE_SCHEMA), epoch_id=0, query_id="a")
+    rec.table.append(row(0), epoch_id=0, query_id="a")
     _inject_competing_commit(rec.table)
-    rec.table.append(spark.createDataFrame(row(1), LINEAGE_SCHEMA), epoch_id=1, query_id="a")
+    rec.table.append(row(1), epoch_id=1, query_id="a")
     assert sorted(int(r.epoch_id) for r in rec.read().collect()) == [0, 1]
 
 
@@ -567,3 +568,129 @@ def test_write_data_one_balanced_file_per_bucket(spark, tmp_path):
     # and the merged state is still the batch-oracle state
     got = t.read().count()
     assert got == final_state(log).count()
+
+
+def test_xxhash64_bucket_matches_spark_bucket_id(spark, tmp_path):
+    """The driver-side router the append path uses must put every row
+    in the bucket Spark's ``bucket_id()`` gives it — under a plain spec
+    and mid progressive migration — or pruned reads would miss the row.
+    Strings cover empty, non-ASCII and 1–80 bytes (the ≥32-byte stripe
+    loop and the 8/4/1-byte tails); ints and longs cover the fixed-width
+    paths; NULL hashes to the seed. An uncovered type refuses to route."""
+    import random
+
+    import pytest
+
+    from sql_graph_visualizer_spark.lake.snapshot_table import _xxhash64
+
+    rnd = random.Random(7)
+    alphabet = "abcXYZ019 _-é€中😀"
+    strings = ["", None, "é", "€", "中文", "😀"]
+    strings += ["".join(rnd.choice(alphabet) for _ in range(n)) for n in range(1, 81)]
+    strings += ["x" * n for n in range(1, 81)]
+    ints = [None, 0, 1, -1, 2**31 - 1, -(2**31)] + [rnd.randint(-(2**31), 2**31 - 1) for _ in range(40)]
+    longs = [None, 0, 1, -1, 2**63 - 1, -(2**63)] + [rnd.randint(-(2**63), 2**63 - 1) for _ in range(40)]
+    for dt, vals in ((T.StringType(), strings), (T.IntegerType(), ints), (T.LongType(), longs)):
+        schema = T.StructType([T.StructField("v", dt)])
+        name = dt.simpleString()
+        plain = SnapshotTable.create(spark, str(tmp_path / f"p-{name}"), schema, ["v"], num_buckets=7)
+        mig = SnapshotTable.create(spark, str(tmp_path / f"m-{name}"), schema, ["v"], num_buckets=4)
+        mig.rebucket_start(12)
+        mig.rebucket_step(max_buckets=2)
+        mp, mm = plain.manifest(), mig.manifest()
+        assert mm["migration"] == {"new_num_buckets": 12, "frontier": 2}
+        rows = (
+            spark.createDataFrame([(v,) for v in vals], schema)
+            .select(
+                "v",
+                F.xxhash64("v").alias("h"),
+                plain.bucket_id().alias("b_plain"),
+                mig.bucket_id().alias("b_mig"),
+            )
+            .collect()
+        )
+        assert len(rows) == len(vals)
+        for r in rows:
+            assert _xxhash64(r["v"], dt) == r["h"], (name, r["v"])
+            assert SnapshotTable._bucket_of(mp, r["v"], dt) == r["b_plain"], (name, r["v"])
+            assert SnapshotTable._bucket_of(mm, r["v"], dt) == r["b_mig"], (name, r["v"])
+    # end to end: rows appended mid-migration sit in the bucket a pruned
+    # read of their Spark bucket id opens
+    mig.append([(v,) for v in longs], epoch_id=0, query_id="q")
+    for b in mig.manifest()["segments"]:
+        ids = {r[0] for r in mig.read(buckets=[int(b)]).select(mig.bucket_id()).collect()}
+        assert ids == {int(b)}, b
+    assert mig.read().count() == len(longs)
+    # byte/short hash as 4-byte ints, like Spark
+    small = spark.createDataFrame(
+        [(b, s_) for b, s_ in zip([None, 0, -1, 127, -128, 5], [None, 0, -1, 32767, -32768, 300])],
+        "b byte, s short",
+    )
+    for r in small.select("b", "s", F.xxhash64("b").alias("hb"), F.xxhash64("s").alias("hs")).collect():
+        assert _xxhash64(r["b"], T.ByteType()) == r["hb"]
+        assert _xxhash64(r["s"], T.ShortType()) == r["hs"]
+    for dt in (T.DoubleType(), T.TimestampType(), T.BinaryType(), T.StringType("UTF8_LCASE")):
+        with pytest.raises(TypeError):
+            SnapshotTable._bucket_of(mp, None, dt)
+
+
+def test_lineage_flush_runs_no_spark_job(spark, tmp_path):
+    """A lineage commit is a driver-side file write plus a manifest
+    commit: flushing an epoch's row launches no Spark job, and the row
+    reads back exactly as recorded."""
+    from sql_graph_visualizer_spark.lake.snapshot_table import MergeStats
+    from sql_graph_visualizer_spark.streaming.metrics import LineageRecorder
+
+    rec = LineageRecorder(spark, os.path.join(str(tmp_path), "lin"), flush_every=2)
+    sc = spark.sparkContext
+    group = f"lineage-flush-{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, "lineage flush probe")
+    try:
+        for e in range(3):
+            rec.record(MergeStats(e, 10 + e, 8, 2, 3, False, 100, 5 + e), query_id="q")
+        rec.record(MergeStats(0, 1, 1, 0, 1, False, 10, 1), query_id="other")
+        rec.flush()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    rows = sorted((r.query_id, r.epoch_id, r.rows_in, r.buckets_touched, r.snapshot_version)
+                  for r in rec.read().collect())
+    assert rows == [("other", 0, 1, 1, 1), ("q", 0, 10, 3, 5), ("q", 1, 11, 3, 6), ("q", 2, 12, 3, 7)]
+    m = rec.table.manifest()
+    assert m["epochs"] == {"lineage:q": 2, "lineage:other": 0}
+
+
+def test_lineage_crash_before_manifest_commit_hides_row(spark, tmp_path):
+    """A crash after the lineage data file is created but before the
+    manifest commit leaves an unreferenced file only: no visible row,
+    and the next flush commits normally."""
+    import pytest
+
+    from sql_graph_visualizer_spark.lake.file_io import LocalFileIO
+    from sql_graph_visualizer_spark.lake.snapshot_table import MergeStats
+    from sql_graph_visualizer_spark.streaming.metrics import LineageRecorder
+
+    class CrashyIO(LocalFileIO):
+        def __init__(self):
+            self.crash_next_manifest = True
+            self.data_files: list[str] = []
+
+        def create_exclusive(self, path, data):
+            if path.endswith(".parquet"):
+                self.data_files.append(path)
+            if self.crash_next_manifest and f"{os.sep}snapshots{os.sep}" in path:
+                self.crash_next_manifest = False
+                raise OSError("simulated crash before the manifest commit")
+            super().create_exclusive(path, data)
+
+    path = os.path.join(str(tmp_path), "lin")
+    rec = LineageRecorder(spark, path)
+    rec.table.io = io = CrashyIO()
+    with pytest.raises(OSError, match="simulated crash"):
+        rec.record(MergeStats(0, 5, 5, 0, 1, False, 10, 1), query_id="q")
+    assert len(io.data_files) == 1 and os.path.exists(io.data_files[0])
+    assert rec.read().count() == 0
+    assert rec.table.manifest()["version"] == 1
+    rec.record(MergeStats(1, 7, 7, 0, 1, False, 10, 2), query_id="q")
+    rows = [(r.epoch_id, r.rows_in) for r in LineageRecorder(spark, path).read().collect()]
+    assert rows == [(1, 7)]

@@ -366,6 +366,35 @@ def test_compact_deltas_yields_to_concurrent_ingest(spark, tmp_path):
     # validation fired; logical-state checks live in the tests above)
 
 
+def test_compact_deltas_rebases_over_newer_delta_commit(spark, tmp_path):
+    """A MoR commit that only stacks NEW deltas on a target bucket while
+    a fold runs does not invalidate the fold: it rebases, the newer
+    deltas stay on top of the folded base, and the state is unchanged.
+    (Yielding here let an async fold slower than one epoch lose every
+    race, so delta layers grew past the auto-compaction bound.)"""
+    t = _table(spark, tmp_path, buckets=4)
+    log = gen_cdc_log(spark, 900, num_convs=8, turns_per_conv=5)
+    t.merge_upsert(log.filter("seq < 300"), epoch_id=0, query_id="q")
+    t.merge_upsert(log.filter("seq >= 300 and seq < 600"), epoch_id=1, query_id="q", mode="mor")
+    orig = t._write_manifest
+    fired = {"done": False}
+
+    def racy(manifest):
+        if not fired["done"] and manifest["summary"]["operation"] == "compact-deltas":
+            fired["done"] = True  # a MoR epoch lands between fold and commit
+            t.merge_upsert(log.filter("seq >= 600"), epoch_id=2, query_id="q", mode="mor")
+        return orig(manifest)
+
+    t._write_manifest = racy
+    t.compact_deltas()
+    assert fired["done"]
+    m = t.manifest()
+    assert m["summary"]["operation"] == "compact-deltas"
+    assert m["epochs"]["q"] == 2
+    assert m["deltas"] and all(len(refs) == 1 for refs in m["deltas"].values())
+    assert _state(t) == _expected(log)
+
+
 def test_expire_snapshots_keeps_live_delta_segments(spark, tmp_path):
     """Delta segments and their data files are GC roots while any kept
     snapshot references them."""

@@ -536,3 +536,31 @@ def test_json_file_skipping_replay_matches_oracle(spark, tmp_path):
     replay_batch(jlog2, t3, epochs=4, bounds=(0, 3999), query_id="cached")
     assert _state(t3) == _expected(log)
     assert getattr(jlog2, "_sgv_file_ranges", None) is None  # never probed
+
+
+def test_json_file_skipping_ignores_files_added_after_read(spark, tmp_path):
+    """The file-skip probe reads the log DataFrame's own file listing
+    (``inputFiles()``, fixed at read time), not a fresh listing of the
+    dir: a file dropped into the log dir after ``read_cdc_log`` is not
+    replayed, and the final state equals the oracle over the original
+    files."""
+    import shutil
+
+    from sql_graph_visualizer_spark.sources.cdc_gen import read_cdc_log
+
+    log = gen_cdc_log(spark, 2000, num_convs=10, turns_per_conv=10)
+    log_dir = str(tmp_path / "jl")
+    write_cdc_log_dir(log, log_dir, num_files=4, fmt="json")
+    jlog = read_cdc_log(spark, log_dir, fmt="json")
+    # a late file: higher-seq rewrites of every key, which would win LWW
+    late = log.withColumn("seq", F.col("seq") + 100_000).withColumn("text", F.lit("LATE"))
+    late_dir = str(tmp_path / "late")
+    write_cdc_log_dir(late, late_dir, num_files=1, fmt="json")
+    (part,) = [f for f in os.listdir(late_dir) if f.endswith(".json.gz")]
+    shutil.copy(os.path.join(late_dir, part), os.path.join(log_dir, "part-late.json.gz"))
+
+    t = SnapshotTable.create(spark, str(tmp_path / "t"), SCHEMA, KEYS, num_buckets=8)
+    stats = replay_batch(jlog, t, epochs=4, persist_log=False)
+    assert len(stats) == 4 and not any(s.skipped for s in stats)
+    assert len(jlog._sgv_file_ranges) == 4
+    assert _state(t) == _expected(log)
